@@ -101,6 +101,38 @@ def _shingles(text: str, n: int = 3) -> set[str]:
     return {" ".join(words[i : i + n]) for i in range(len(words) - n + 1)}
 
 
+# --- join-side sizing (shared by minhash / simhash / jaccard verify) ---------------
+
+# broadcast cap for the blocked simhash self-join build side (rows):
+# its rows are three LONGS (~40 B/row in the hashed relation), so 10M
+# rows ~ 400 MB — well under Spark's 8 GB / 512M-row broadcast limits;
+# larger inputs use a shuffled join instead
+SIMHASH_BROADCAST_MAX_ROWS = 10_000_000
+# broadcast cap for build sides that carry CALLER-SUPPLIED id values
+# (minhash banded rows, jaccard candidate pairs): ids can be wide
+# strings, so the per-row sizing argument above does not apply — cap
+# lower (2M rows ~ a few hundred MB even at ~100 B/id; r6 review)
+KEYED_BROADCAST_MAX_ROWS = 2_000_000
+
+
+def _checkpoint_and_size(df: DataFrame, max_rows: int, fanout: int = 1) -> tuple[DataFrame, bool]:
+    """Materialize ``df`` once and report whether the join side built
+    from it (``fanout`` rows per input row) fits under ``max_rows``.
+
+    The checkpoint (localCheckpoint — the small proxy table, e.g. the
+    per-document signatures) keeps a self-join or a second consumer from
+    rebuilding the whole upstream lineage: without it every document is
+    tokenized and hashed once per join side. The count both materializes
+    the checkpoint and sizes the broadcast decision from real rows: the
+    planner only sees the origin plan's size estimate, and auto-broadcasts
+    only below ``spark.sql.autoBroadcastJoinThreshold`` (10 MB by
+    default, far under these caps). Callers broadcast below the cap and
+    leave the planner's join choice (a shuffled join where AQE skew
+    handling applies, at the sizes the caps are for) above it."""
+    df = df.localCheckpoint(eager=False)
+    return df, df.count() * fanout <= max_rows
+
+
 # --- MinHash + LSH -------------------------------------------------------------------
 
 MINHASH_P = (1 << 31) - 1  # Mersenne prime; a*x+b stays < 2^62, no int64 wrap
@@ -176,16 +208,13 @@ def minhash_lsh_candidates(
     bucket are candidates. Shuffle is by (band, bucket-hash) — each
     bucket is tiny, so the pair join never goes quadratic globally."""
     rows = n_hashes // bands
-    # r6: materialize the signatures once (localCheckpoint — the small
-    # proxy table, n_docs x n_hashes longs): the self-join otherwise
-    # rebuilds the whole signature MapInPandas lineage for its second
-    # side, tokenizing and hashing every document twice. The count both
-    # materializes the checkpoint and sizes the broadcast decision (a
-    # checkpointed relation has no size estimate for the planner).
-    sigs = minhash_signatures(df, id_col, text_col, n_hashes, shingle_n, seed).localCheckpoint(
-        eager=False
+    # the signatures (n_docs x n_hashes longs) feed both join sides, one
+    # banded row per (doc, band)
+    sigs, small = _checkpoint_and_size(
+        minhash_signatures(df, id_col, text_col, n_hashes, shingle_n, seed),
+        KEYED_BROADCAST_MAX_ROWS,
+        bands,
     )
-    n_banded = sigs.count() * bands
     banded = sigs.select(
         id_col,
         F.explode(
@@ -204,11 +233,10 @@ def minhash_lsh_candidates(
     ).select(id_col, "bb.band", "bb.bucket")
     a = banded.select(F.col(id_col).alias("id_a"), "band", "bucket")
     b = banded.select(F.col(id_col).alias("id_b"), "band", "bucket")
-    # broadcast below the wide-id row cap, planner-shuffled join above
-    # it; the distinct stays — banding duplicates cannot be filtered
-    # from bucket hashes alone, and candidate volume is bounded by the
-    # tiny bucket sizes
-    build = F.broadcast(b) if n_banded <= KEYED_BROADCAST_MAX_ROWS else b
+    # the distinct stays — banding duplicates cannot be filtered from
+    # bucket hashes alone, and candidate volume is bounded by the tiny
+    # bucket sizes
+    build = F.broadcast(b) if small else b
     return (
         a.join(build, ["band", "bucket"])
         .where(F.col("id_a") < F.col("id_b"))
@@ -219,18 +247,6 @@ def minhash_lsh_candidates(
 
 
 # --- SimHash ---------------------------------------------------------------------------
-
-# broadcast cap for the blocked simhash self-join build side (rows):
-# its rows are three LONGS (~40 B/row in the hashed relation), so 10M
-# rows ~ 400 MB — well under Spark's 8 GB / 512M-row broadcast limits;
-# larger inputs use a shuffled join instead
-SIMHASH_BROADCAST_MAX_ROWS = 10_000_000
-# broadcast cap for build sides that carry CALLER-SUPPLIED id values
-# (minhash banded rows, jaccard candidate pairs): ids can be wide
-# strings, so the per-row sizing argument above does not apply — cap
-# lower (2M rows ~ a few hundred MB even at ~100 B/id; r6 review)
-KEYED_BROADCAST_MAX_ROWS = 2_000_000
-
 
 def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 64) -> DataFrame:
     """64-bit SimHash per document (token-hash sign voting). Token hash is
@@ -356,12 +372,11 @@ def simhash_near_dups(df: DataFrame, id_col: str, text_col: str, max_hamming: in
     * combination blocking (pair-of-slices groups, _simhash_groups):
       double-width keys cut raw candidate probes ~1.6x on clustered
       corpora.
-    * the signature table is materialized once (localCheckpoint — n_docs
-      x 16 bytes, the guide-§8 "small proxy" shape) so the self-join's
-      build side does not rebuild the whole MapInPandas lineage: the
-      previous plan tokenized and hashed every document TWICE. The join
-      stays BROADCAST on the blocked build side deliberately: the group
-      keys are heavily skewed (measured 17k-doc buckets at sf1.0 under
+    * the signature table is materialized once (_checkpoint_and_size —
+      n_docs x 16 bytes) so the self-join's build side does not rebuild
+      the whole MapInPandas lineage. The join stays BROADCAST on the
+      blocked build side deliberately: the group keys are heavily
+      skewed (measured 17k-doc buckets at sf1.0 under
       single-slice blocking), and a shuffled join would send each
       bucket's quadratic pair generation to one task (measured 2.5x
       slower); with a broadcast build the stream side stays evenly
@@ -376,12 +391,11 @@ def simhash_near_dups(df: DataFrame, id_col: str, text_col: str, max_hamming: in
       The hamming filter precedes it, so the when-chain only runs on
       verified pairs.
     """
-    hashed = simhash(df, id_col, text_col).localCheckpoint(eager=False)
-    # materializes the checkpoint (one job over the tiny signature
-    # table) and sizes the join: a checkpointed relation has no size
-    # estimate, so the planner would never auto-broadcast it
     groups = _simhash_groups(max_hamming)
-    n_blocked = hashed.count() * len(groups)
+    # one blocked row per (doc, group)
+    hashed, small = _checkpoint_and_size(
+        simhash(df, id_col, text_col), SIMHASH_BROADCAST_MAX_ROWS, len(groups)
+    )
     # group keys are packed into ONE long — slices compacted, group index
     # in the low bits — so the join key is a single LongType column and
     # the broadcast build becomes a LongHashedRelation (direct long-keyed
@@ -429,10 +443,7 @@ def simhash_near_dups(df: DataFrame, id_col: str, text_col: str, max_hamming: in
     group_idx = (
         F.col("bk").bitwiseAND(F.lit((1 << gbits) - 1)) if gbits else F.lit(0)
     )
-    # broadcast while the blocked build side is small (~40 B/row; 10M
-    # rows ~ 400 MB hashed relation); beyond that fall back to the
-    # planner's shuffled join, where AQE skew handling applies
-    build = F.broadcast(b) if n_blocked <= SIMHASH_BROADCAST_MAX_ROWS else b
+    build = F.broadcast(b) if small else b
     return (
         a.join(build, ["bk"])
         .where(F.col("id_a") < F.col("id_b"))
@@ -542,13 +553,12 @@ def ngram_jaccard_verify(
     pairs are checkpointed too — they now feed three consumers (the id
     set and both joins). Same pairs out: the joins are inner on
     candidate ids, so grams of non-candidate docs were never used."""
-    cand = candidates.select("id_a", "id_b").localCheckpoint(eager=False)
-    # count materializes the checkpoint and sizes the joins (a
-    # checkpointed relation has no planner size estimate): while the
-    # pair set is small, broadcast it — the gram side then streams with
-    # no shuffle; past the cap, planner-shuffled joins + AQE take over
-    # (wide-id cap: pair rows carry caller-supplied id values)
-    small = cand.count() <= KEYED_BROADCAST_MAX_ROWS
+    # while the pair set is small it is broadcast and the gram side
+    # streams with no shuffle (wide-id cap: pair rows carry
+    # caller-supplied id values)
+    cand, small = _checkpoint_and_size(
+        candidates.select("id_a", "id_b"), KEYED_BROADCAST_MAX_ROWS
+    )
     ids = (
         cand.select(F.col("id_a").alias("_gid"))
         .union(cand.select(F.col("id_b").alias("_gid")))
@@ -714,9 +724,7 @@ def connected_components(
     quasi-cliques), so this is 2-4 shuffles in practice; each round is
     one equi-join + one groupBy on the node key, never a pair product.
     localCheckpoint truncates the growing lineage every few rounds
-    (plan-size blowup, not data volume, is the iteration risk). For
-    adversarial long-chain graphs swap in large-star/small-star; for
-    dedup workloads min-propagation is the right cost shape.
+    (plan-size blowup, not data volume, is the iteration risk).
     """
     sym = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     sym = sym.union(sym.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
@@ -789,120 +797,6 @@ def connected_components(
     return result
 
 
-def connected_components_star(
-    pairs: DataFrame,
-    src: str,
-    dst: str,
-    max_iterations: int = 50,
-    checkpoint_every: int = 3,
-) -> DataFrame:
-    """Connected components by alternating LARGE-STAR / SMALL-STAR
-    rounds (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC 2014) — O(log^2 n) rounds INDEPENDENT of graph
-    diameter, vs min-label propagation's O(diameter). The opt-in
-    strategy for adversarial long-chain graphs; for near-dup
-    quasi-cliques min-label's 2-4 cheap rounds win (see
-    connected_components). Same contract: (node, component) with
-    component = min reachable id.
-
-    Per round, both operations are one groupBy + one equi-join on the
-    node key — never a pair product:
-      large-star: every neighbor v > u links to m = min(N(u) ∪ {u})
-      small-star: every neighbor v ≤ u (edges pointed high→low) links
-                  to m = min of that down-neighborhood
-    Fixpoint = the directed high→low edge set stops changing; at that
-    point edges form stars rooted at each component's minimum."""
-    nodes = (
-        pairs.select(F.col(src).alias("node"))
-        .union(pairs.select(F.col(dst).alias("node")))
-        .distinct()
-        .persist()
-    )
-    # directed high→low, self-loops dropped
-    edges = (
-        pairs.select(
-            F.greatest(F.col(src), F.col(dst)).alias("u"),
-            F.least(F.col(src), F.col(dst)).alias("v"),
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .persist()
-    )
-    converged = False
-    prev = edges
-    for it in range(max_iterations):
-        sym = prev.union(prev.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        # large-star: m(u) = min over N(u)∪{u}; rewire strictly-larger
-        # neighbors to m
-        mins = sym.groupBy("u").agg(
-            F.min(F.least(F.col("v"), F.col("u"))).alias("m")
-        )
-        large = (
-            sym.where(F.col("v") > F.col("u"))
-            .join(mins, "u")
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-        )
-        e1 = (
-            large.select(
-                F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
-            )
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # small-star over the high→low set: m(u) = min(down-nbrs); every
-        # down-neighbor AND u itself link to m
-        mins2 = e1.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
-            e1.join(mins2, "u")
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-            .union(mins2.select(F.col("u").alias("a"), F.col("m").alias("b")))
-        )
-        new_edges = (
-            small.select(
-                F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
-            )
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        if checkpoint_every and (it + 1) % checkpoint_every == 0:
-            new_edges = new_edges.localCheckpoint()
-        else:
-            new_edges = new_edges.persist()
-        # exact fixpoint test: the high→low edge set is canonical, so
-        # equal-count + empty-difference == set equality (two small jobs
-        # per round; the O(log^2 n) round count keeps the total low)
-        same_size = new_edges.count() == prev.count()
-        stable = same_size and new_edges.exceptAll(prev).limit(1).count() == 0
-        if prev is not edges:
-            prev.unpersist()
-        prev = new_edges
-        if stable:
-            converged = True
-            break
-    if not converged:
-        if prev is not edges:
-            prev.unpersist()
-        edges.unpersist()
-        nodes.unpersist()
-        raise RuntimeError(
-            f"connected_components_star did not converge within "
-            f"{max_iterations} iterations"
-        )
-    # at fixpoint every non-root points straight at its component root;
-    # roots (and singletons, if any) label themselves
-    result = (
-        nodes.join(prev.withColumnRenamed("u", "node"), "node", "left")
-        .groupBy("node")
-        .agg(F.min(F.coalesce(F.col("v"), F.col("node"))).alias("component"))
-        .localCheckpoint()
-    )
-    if prev is not edges:
-        prev.unpersist()
-    edges.unpersist()
-    nodes.unpersist()
-    return result
-
-
 def resolve_duplicate_clusters(
     pairs: DataFrame,
     docs: DataFrame,
@@ -910,7 +804,6 @@ def resolve_duplicate_clusters(
     text_col: str,
     src: str = "id_a",
     dst: str = "id_b",
-    strategy: str = "min_label",
 ) -> DataFrame:
     """Pairs → clusters → canonical winner per cluster: the longest text
     wins, ties broken by smallest id (deterministic across partitionings
@@ -919,8 +812,7 @@ def resolve_duplicate_clusters(
     doc; singletons are not duplicates and are left out. Downstream
     "keep one per cluster" is `where(is_canonical)` + anti-join.
     """
-    cc = connected_components if strategy == "min_label" else connected_components_star
-    comps = cc(pairs, src, dst)
+    comps = connected_components(pairs, src, dst)
     scored = comps.join(
         docs.select(
             F.col(id_col).alias("node"), F.length(F.col(text_col)).alias("_tl")

@@ -44,37 +44,52 @@ def _term_pattern(t: str) -> str:
     return rf"(?<![{WORD_CHARS}]){re.escape(t)}(?![{WORD_CHARS}])"
 
 
-def relevance_col(text: Column, query: str) -> Column:
-    """Sum of per-term occurrence counts (case-insensitive, word-bounded)
-    — the textScore analog; 0 when any... no: $text ORs terms, so score
-    is the plain sum over terms."""
-    terms = _terms(query)
-    if not terms:
-        return F.lit(0).cast("long")
+def _count_sum(low: Column, terms: list[str]) -> Column:
+    """Plain relevance: the sum of per-term word-bounded occurrence
+    counts in the lowered text ``low`` — $text ORs terms, so the score
+    is the sum over terms (0 when none match)."""
     score = F.lit(0).cast("long")
     for t in terms:
-        score = score + F.regexp_count(F.lower(text), F.lit(_term_pattern(t))).cast("long")
+        score = score + F.regexp_count(low, F.lit(_term_pattern(t))).cast("long")
     return score
 
 
-def weighted_text_score(fields: dict[str, float], query: str) -> Column:
-    """Mongo-$text-style relevance: per indexed FIELD with weight w, per
-    query term with tf occurrences in that field, the contribution is
-    w * (0.5 + 0.5 * tf / (tf + 1)) when tf > 0 — a saturating
-    term-frequency curve with field weighting, the shape Mongo documents
-    for textScore (exact constants are not a public contract; this is
-    the documented approximation). Deliberately transcendental-free:
-    only small-int arithmetic and one IEEE division per term, so the
-    DuckDB oracle reproduces it bit-for-bit."""
+def relevance_col(text: Column, query: str) -> Column:
+    """Sum of per-term occurrence counts (case-insensitive, word-bounded)
+    — the textScore analog."""
+    return _count_sum(F.lower(text), _terms(query))
+
+
+def _saturating_tf_score(weights: list[float], n_terms: int, cnt_of) -> Column:
+    """Field-weighted saturating-TF relevance over a count source
+    ``cnt_of(field_idx, term_idx)``: per field with weight w and per
+    query term with tf occurrences, w * (0.5 + 0.5 * tf / (tf + 1)) when
+    tf > 0 — the shape Mongo documents for textScore (exact constants
+    are not a public contract; this is the documented approximation).
+    Deliberately transcendental-free: only small-int arithmetic and one
+    IEEE division per term, so the DuckDB oracle reproduces it
+    bit-for-bit."""
     score = F.lit(0.0)
-    for col_name, weight in fields.items():
-        low = F.lower(F.col(col_name))
-        for t in _terms(query):
-            tf = F.regexp_count(low, F.lit(_term_pattern(t))).cast("double")
+    for i, weight in enumerate(weights):
+        for j in range(n_terms):
+            tf = cnt_of(i, j).cast("double")
             score = score + F.when(
                 tf > 0, F.lit(float(weight)) * (0.5 + 0.5 * tf / (tf + 1))
             ).otherwise(0.0)
     return score
+
+
+def weighted_text_score(fields: dict[str, float], query: str) -> Column:
+    """Mongo-$text-style relevance as a column: the saturating-TF
+    formula (_saturating_tf_score) over per-(field, term) match counts.
+    :func:`text_search_mongo` ranks by Mongo's exact textScore."""
+    terms = _terms(query)
+    lows = [F.lower(F.col(c)) for c in fields]
+    return _saturating_tf_score(
+        list(fields.values()),
+        len(terms),
+        lambda i, j: F.regexp_count(lows[i], F.lit(_term_pattern(terms[j]))),
+    )
 
 
 def _bound_term_counts(
@@ -93,6 +108,10 @@ def _bound_term_counts(
     counts = {}
     for i, col_name in enumerate(fields):
         if with_ntokens:
+            # numTokens over the RAW text: full-string case folding can
+            # mint or merge word runs differently per engine (İ U+0130
+            # lowers to 'i'+combining-mark in Java — TWO runs — but plain
+            # 'i' in DuckDB); run counts on the unfolded text agree
             counts[f"_ts_nt_{i}"] = F.size(
                 F.regexp_extract_all(F.col(col_name), F.lit(WORD_RUN), 0)
             ).cast("double")
@@ -106,6 +125,17 @@ def _bound_term_counts(
     )
 
 
+def _top_scored(df: DataFrame, id_col: str, score_col: str, limit: int) -> DataFrame:
+    """Shared ranked tail: matching rows only (score > 0), score desc
+    with an id asc tie-break (deterministic), top ``limit``."""
+    return (
+        df.where(F.col(score_col) > 0)
+        .select(id_col, score_col)
+        .orderBy(F.desc(score_col), F.asc(id_col))
+        .limit(limit)
+    )
+
+
 def text_search_weighted(
     df: DataFrame, fields: dict[str, float], query: str, id_col: str, limit: int = 20
 ) -> DataFrame:
@@ -113,28 +143,20 @@ def text_search_weighted(
     raw match-count form below). r6: per-(field, term) counts bound once
     (identical arithmetic on top — same values, ~3x fewer regex passes)."""
     base, terms, cnt_of, _ = _bound_term_counts(df, fields, query, with_ntokens=False)
-    score = F.lit(0.0)
-    for i, (col_name, weight) in enumerate(fields.items()):
-        for j, t in enumerate(terms):
-            tf = cnt_of(i, j).cast("double")
-            score = score + F.when(
-                tf > 0, F.lit(float(weight)) * (0.5 + 0.5 * tf / (tf + 1))
-            ).otherwise(0.0)
-    return (
-        base.withColumn("score", F.round(score, 4))
-        .where(F.col("score") > 0)
-        .select(id_col, "score")
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(limit)
-    )
+    score = _saturating_tf_score(list(fields.values()), len(terms), cnt_of)
+    return _top_scored(base.withColumn("score", F.round(score, 4)), id_col, "score", limit)
 
 
-def mongo_text_score(fields: dict[str, float], query: str) -> Column:
-    """MongoDB's EXACT textScore formula (open-source: mongo/src/mongo/
-    db/fts/fts_spec.cpp, ``FTSSpec::_scoreStringV2``), not the
-    saturating approximation above. Per (field with weight w, query
-    term with ``count`` occurrences among the field's ``numTokens``
-    word tokens):
+def text_search_mongo(
+    df: DataFrame, fields: dict[str, float], query: str, id_col: str, limit: int = 20
+) -> DataFrame:
+    """P9 relevance ranking under MongoDB's EXACT textScore formula
+    (open-source: mongo/src/mongo/db/fts/fts_spec.cpp,
+    ``FTSSpec::_scoreStringV2``; article_search_routes.py:52-81 sorts on
+    {$meta: "textScore"}), not the saturating approximation of
+    :func:`text_search_weighted`. Per (field with weight w, query term
+    with ``count`` occurrences among the field's ``numTokens`` word
+    tokens):
 
         freq  = sum_{k=1..count} 1/2^(k-1)  =  2 - 2^(1-count)
         coeff = 0.5 * count / numTokens + 0.5
@@ -147,19 +169,14 @@ def mongo_text_score(fields: dict[str, float], query: str) -> Column:
     processing Mongo also skips for 'none'); for stemmed languages the
     scores would diverge on inflected terms only. Expression shape is
     kept identical in the DuckDB oracle (same association order, one
-    pow + one division per term) so the driver hash matches bit-exact."""
+    pow + one division per term) so the driver hash matches bit-exact.
+    r6: per-(field, term) counts and per-field numTokens bound once."""
+    base, terms, cnt_of, nt_of = _bound_term_counts(df, fields, query, with_ntokens=True)
     score = F.lit(0.0)
-    for col_name, weight in fields.items():
-        low = F.lower(F.col(col_name))
-        # numTokens over the RAW text: full-string case folding can mint
-        # or merge word runs differently per engine (İ U+0130 lowers to
-        # 'i'+combining-mark in Java — TWO runs — but plain 'i' in
-        # DuckDB); run counts on the unfolded text agree everywhere
-        n_tokens = F.size(
-            F.regexp_extract_all(F.col(col_name), F.lit(WORD_RUN), 0)
-        ).cast("double")
-        for t in _terms(query):
-            cnt = F.regexp_count(low, F.lit(_term_pattern(t))).cast("double")
+    for i, weight in enumerate(fields.values()):
+        n_tokens = nt_of(i)
+        for j in range(len(terms)):
+            cnt = cnt_of(i, j).cast("double")
             freq = F.lit(2.0) - F.pow(F.lit(2.0), F.lit(1.0) - cnt)
             coeff = F.lit(0.5) * cnt / n_tokens + F.lit(0.5)
             # cnt > 0 implies n_tokens > 0, so the division in the taken
@@ -167,36 +184,7 @@ def mongo_text_score(fields: dict[str, float], query: str) -> Column:
             score = score + F.when(
                 cnt > 0, F.lit(float(weight)) * freq * coeff
             ).otherwise(0.0)
-    return score
-
-
-def text_search_mongo(
-    df: DataFrame, fields: dict[str, float], query: str, id_col: str, limit: int = 20
-) -> DataFrame:
-    """P9 relevance ranking under Mongo's exact textScore constants
-    (article_search_routes.py:52-81 sorts on {$meta: "textScore"}).
-    r6: per-(field, term) counts and per-field numTokens bound once;
-    the score arithmetic on top is shape-identical to mongo_text_score
-    (same association order, one pow + one division per term), so the
-    values — and the driver hash — are unchanged."""
-    base, terms, cnt_of, nt_of = _bound_term_counts(df, fields, query, with_ntokens=True)
-    score = F.lit(0.0)
-    for i, (col_name, weight) in enumerate(fields.items()):
-        n_tokens = nt_of(i)
-        for j, t in enumerate(terms):
-            cnt = cnt_of(i, j).cast("double")
-            freq = F.lit(2.0) - F.pow(F.lit(2.0), F.lit(1.0) - cnt)
-            coeff = F.lit(0.5) * cnt / n_tokens + F.lit(0.5)
-            score = score + F.when(
-                cnt > 0, F.lit(float(weight)) * freq * coeff
-            ).otherwise(0.0)
-    return (
-        base.withColumn("score", F.round(score, 4))
-        .where(F.col("score") > 0)
-        .select(id_col, "score")
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(limit)
-    )
+    return _top_scored(base.withColumn("score", F.round(score, 4)), id_col, "score", limit)
 
 
 def text_search(
@@ -208,19 +196,11 @@ def text_search(
     # r6: lower(text) bound once — the per-term counts (and require_all
     # rlikes) each re-lowered the document otherwise. Same values.
     base = df.withColumn("_ts_low", F.lower(F.col(text_col)))
-    rel = F.lit(0).cast("long")
-    for t in terms:
-        rel = rel + F.regexp_count(F.col("_ts_low"), F.lit(_term_pattern(t))).cast("long")
-    out = base.withColumn("relevance", rel)
+    out = base.withColumn("relevance", _count_sum(F.col("_ts_low"), terms))
     if require_all and terms:
         for t in terms:
             out = out.where(F.col("_ts_low").rlike(_term_pattern(t)))
-    return (
-        out.where(F.col("relevance") > 0)
-        .select(id_col, "relevance")
-        .orderBy(F.desc("relevance"), F.asc(id_col))
-        .limit(limit)
-    )
+    return _top_scored(out, id_col, "relevance", limit)
 
 
 def _token_array(text_col: str, extract_then_lower: bool):
@@ -424,11 +404,8 @@ def _span_ends_result(per_doc: DataFrame, cand: Column, limit: int) -> DataFrame
     """Shared phrase/proximity tail: count the surviving span-end
     positions, keep matching docs, rank deterministically."""
     occ = F.size(cand).cast("long")
-    return (
-        per_doc.select("doc_id", occ.alias("occurrences"))
-        .where(F.col("occurrences") > 0)
-        .orderBy(F.desc("occurrences"), F.asc("doc_id"))
-        .limit(limit)
+    return _top_scored(
+        per_doc.select("doc_id", occ.alias("occurrences")), "doc_id", "occurrences", limit
     )
 
 
@@ -491,14 +468,7 @@ def bm25_search_indexed(
     if not terms:
         return _empty_result(index, "score_q")
     matched = index.where(F.col("token").isin(*terms))
-    per_doc_tf = matched.groupBy("doc_id").agg(
-        *[
-            F.sum(F.when(F.col("token") == t, F.col("tf")).otherwise(0))
-            .cast("long")
-            .alias(f"tf_{i}")
-            for i, t in enumerate(terms)
-        ]
-    )
+    per_doc_tf = matched.groupBy("doc_id").agg(*_term_tf_pivot(terms))
     stats = doc_lens.agg(
         F.count("*").cast("long").alias("n_docs"),
         F.sum("dl").cast("long").alias("total_tokens"),
@@ -516,23 +486,26 @@ def bm25_search_indexed(
         .crossJoin(F.broadcast(stats))
         .crossJoin(F.broadcast(dfs))
     )
-    score = _bm25_score_expr(len(terms), k1, b)
-    return (
-        scored.select(
-            "doc_id",
-            F.floor(score * F.lit(1e6) + F.lit(0.5)).cast("long").alias("score_q"),
-        )
-        .orderBy(F.desc("score_q"), F.asc("doc_id"))
-        .limit(limit)
-    )
+    return _bm25_ranked(scored, len(terms), k1, b, limit)
 
 
-def _bm25_score_expr(n_terms: int, k1: float, b: float) -> Column:
+def _term_tf_pivot(terms: list[str]) -> list[Column]:
+    """Per-term tf pivot aggregates ``tf_i`` over (token, tf) postings
+    grouped by doc — one definition for both BM25 paths."""
+    return [
+        F.sum(F.when(F.col("token") == t, F.col("tf")).otherwise(0))
+        .cast("long")
+        .alias(f"tf_{i}")
+        for i, t in enumerate(terms)
+    ]
+
+
+def _bm25_ranked(scored: DataFrame, n_terms: int, k1: float, b: float, limit: int) -> DataFrame:
     """The Okapi score as a fixed-order expression over pivot columns
-    ``tf_i``/``df_i`` + ``dl``/``n_docs``/``total_tokens`` — ONE
-    definition shared by bm25_search and bm25_search_indexed so the two
-    paths (and the DuckDB oracle mirroring this shape) can never
-    drift."""
+    ``tf_i``/``df_i`` + ``dl``/``n_docs``/``total_tokens``, quantized to
+    integer micro-units and ranked — ONE definition shared by
+    bm25_search and bm25_search_indexed so the two paths (and the DuckDB
+    oracle mirroring this shape) can never drift."""
     n = F.col("n_docs").cast("double")
     dl = F.col("dl").cast("double")
     avgdl = F.col("total_tokens").cast("double") / F.col("n_docs").cast("double")
@@ -549,7 +522,14 @@ def _bm25_score_expr(n_terms: int, k1: float, b: float) -> Column:
     score = contrib(0)
     for i in range(1, n_terms):
         score = score + contrib(i)
-    return score
+    return (
+        scored.select(
+            "doc_id",
+            F.floor(score * F.lit(1e6) + F.lit(0.5)).cast("long").alias("score_q"),
+        )
+        .orderBy(F.desc("score_q"), F.asc("doc_id"))
+        .limit(limit)
+    )
 
 
 def near_search(
@@ -633,13 +613,7 @@ def bm25_search(
     if not terms:
         return _empty_result(index, "score_q")
     per_doc = index.groupBy("doc_id").agg(
-        F.sum("tf").cast("long").alias("dl"),
-        *[
-            F.sum(F.when(F.col("token") == t, F.col("tf")).otherwise(0))
-            .cast("long")
-            .alias(f"tf_{i}")
-            for i, t in enumerate(terms)
-        ],
+        F.sum("tf").cast("long").alias("dl"), *_term_tf_pivot(terms)
     )
     stats = per_doc.agg(
         F.count("*").cast("long").alias("n_docs"),
@@ -649,17 +623,9 @@ def bm25_search(
             for i in range(len(terms))
         ],
     )
-    score = _bm25_score_expr(len(terms), k1, b)
     any_match = F.col("tf_0") > 0
     for i in range(1, len(terms)):
         any_match = any_match | (F.col(f"tf_{i}") > 0)
-    return (
-        per_doc.where(any_match)
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "doc_id",
-            F.floor(score * F.lit(1e6) + F.lit(0.5)).cast("long").alias("score_q"),
-        )
-        .orderBy(F.desc("score_q"), F.asc("doc_id"))
-        .limit(limit)
+    return _bm25_ranked(
+        per_doc.where(any_match).crossJoin(F.broadcast(stats)), len(terms), k1, b, limit
     )

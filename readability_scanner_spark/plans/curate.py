@@ -47,6 +47,7 @@ from readability_scanner_spark.operators.textquality import (
     redact_pii_col,
     token_count_col,
 )
+from readability_scanner_spark.plans.pipeline import commit_json
 
 DEFAULT_SPLITS = (("train", 8000), ("val", 1000), ("test", 1000))
 
@@ -366,11 +367,7 @@ def curate_corpus(
             "counts": counts,
             "skipped": False,
         }
-        os.makedirs(os.path.dirname(meta_path), exist_ok=True)
-        tmp = meta_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh, indent=2, sort_keys=True)
-        os.replace(tmp, meta_path)
+        commit_json(meta_path, meta, indent=2, sort_keys=True)
         return meta
     finally:
         for df in pinned:
@@ -723,11 +720,7 @@ def curate_delta(
             "counts": counts,
             "skipped": False,
         }
-        os.makedirs(os.path.dirname(delta_meta_path), exist_ok=True)
-        tmp = delta_meta_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh, indent=2, sort_keys=True)
-        os.replace(tmp, delta_meta_path)
+        commit_json(delta_meta_path, meta, indent=2, sort_keys=True)
         return meta
     finally:
         for df in pinned:

@@ -167,6 +167,23 @@ def _meta_path(output_path: str) -> str:
     return os.path.join(output_path, "_meta")
 
 
+def commit_json(path: str, obj, **dump_kwargs) -> None:
+    """Write ``obj`` as JSON to ``path`` atomically: the hidden
+    ``.<name>.tmp`` sibling is written, flushed and fsynced, then renamed
+    over ``path``. These files are resume commit points that re-runs
+    ``json.load``; without the fsync a crash can leave a torn or empty
+    file behind the rename, and every later run raises instead of
+    resuming. The hidden name keeps the temp file out of ``*.json``
+    listings."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.tmp")
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh, **dump_kwargs)
+        fh.flush()
+        os.fsync(fh.fileno())
+    os.replace(tmp, path)
+
+
 def committed_buckets(output_path: str) -> set[int]:
     meta = _meta_path(output_path)
     if not os.path.isdir(meta):
@@ -260,11 +277,8 @@ def run_pipeline(
             "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
         meta_row["diagnosis"] = diagnose(meta_row)
-        tmp = os.path.join(_meta_path(output_path), f".bucket-{bucket}.json.tmp")
-        final = os.path.join(_meta_path(output_path), f"bucket-{bucket}.json")
-        with open(tmp, "w") as fh:
-            json.dump(meta_row, fh)
-        os.replace(tmp, final)  # atomic commit point
+        # atomic commit point
+        commit_json(os.path.join(_meta_path(output_path), f"bucket-{bucket}.json"), meta_row)
         summary["buckets_run"] += 1
         summary["turns"] += meta_row["turns_processed"]
         summary["parse_failures"] += meta_row["parse_failures"]

@@ -118,7 +118,13 @@ def streaming_sessions(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """events stream (event_id, user_id, ts) → per-user live session
     snapshot rows, state kept across micro-batches; idle users are
     flushed (final closed-session row) and evicted after one gap of
-    processing-time silence."""
+    processing-time silence.
+
+    The processing-time timeout makes Spark keep scheduling no-data
+    micro-batches to check for idle users, so a query over this operator
+    never terminates on its own, even under ``trigger(availableNow=True)``
+    (``processAllAvailable()`` does not return either): callers stop it
+    explicitly, e.g. once ``recentProgress`` shows the input processed."""
     return (
         events.groupBy("user_id")
         .applyInPandasWithState(

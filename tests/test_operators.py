@@ -142,11 +142,41 @@ def test_ngram_jaccard_pairs(spark, doc_df):
     assert (1, 4) not in pairs
 
 
-def test_minhash_candidates_find_near_dups(spark, doc_df):
-    out = {(r.id_a, r.id_b) for r in dedup.minhash_lsh_candidates(doc_df, "doc_id", "text").collect()}
-    assert (1, 2) in out
-    assert (1, 3) in out
-    assert (4, 5) not in out
+@pytest.fixture
+def join_plans(spark, monkeypatch):
+    """Iterate the test body over both join plans of
+    dedup._checkpoint_and_size: first the default caps (broadcast build
+    side), then both caps at 0 with auto-broadcast off, so the planner's
+    shuffled join runs. Yields a generator of plan names."""
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+
+    def plans():
+        yield "broadcast"
+        monkeypatch.setattr(dedup, "KEYED_BROADCAST_MAX_ROWS", 0)
+        monkeypatch.setattr(dedup, "SIMHASH_BROADCAST_MAX_ROWS", 0)
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        yield "shuffled"
+
+    yield plans()
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+
+
+def _collect(df, plan):
+    """Collect ``df`` after checking its physical plan matches ``plan``."""
+    text = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+    assert ("BroadcastHashJoin" in text) == (plan == "broadcast"), plan
+    return df.collect()
+
+
+def test_minhash_candidates_find_near_dups(spark, doc_df, join_plans):
+    for plan in join_plans:
+        out = {
+            (r.id_a, r.id_b)
+            for r in _collect(dedup.minhash_lsh_candidates(doc_df, "doc_id", "text"), plan)
+        }
+        assert (1, 2) in out, plan
+        assert (1, 3) in out, plan
+        assert (4, 5) not in out, plan
 
 
 def test_simhash_near_dups(spark, doc_df):
@@ -156,11 +186,12 @@ def test_simhash_near_dups(spark, doc_df):
     assert (4, 5) not in out
 
 
-def test_simhash_blocking_complete_vs_bruteforce(spark):
+def test_simhash_blocking_complete_vs_bruteforce(spark, join_plans):
     """Pigeonhole blocking must find EVERY pair at the configured
     max_hamming (the round-1 4x16 layout silently dropped hamming 4-6
     pairs). Brute-force the hamming matrix over the raw simhashes and
-    compare pair sets exactly, for several thresholds."""
+    compare pair sets exactly, for several thresholds and both join
+    plans."""
     docs = (
         spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
         .select("doc_id", "text")
@@ -168,18 +199,26 @@ def test_simhash_blocking_complete_vs_bruteforce(spark):
     )
     hashes = {r.doc_id: r.simhash for r in dedup.simhash(docs, "doc_id", "text").collect()}
     ids = sorted(hashes)
-    for h_max in (3, 6, 12):
-        brute = {
+    brute = {
+        h_max: {
             (a, b)
             for i, a in enumerate(ids)
             for b in ids[i + 1 :]
             if bin((hashes[a] ^ hashes[b]) & ((1 << 64) - 1)).count("1") <= h_max
         }
-        blocked = {
-            (r.id_a, r.id_b)
-            for r in dedup.simhash_near_dups(docs, "doc_id", "text", max_hamming=h_max).collect()
-        }
-        assert blocked == brute, f"h={h_max}: missing={brute - blocked} extra={blocked - brute}"
+        for h_max in (3, 6, 12)
+    }
+    for plan in join_plans:
+        for h_max, want in brute.items():
+            blocked = {
+                (r.id_a, r.id_b)
+                for r in _collect(
+                    dedup.simhash_near_dups(docs, "doc_id", "text", max_hamming=h_max), plan
+                )
+            }
+            assert blocked == want, (
+                f"{plan} h={h_max}: missing={want - blocked} extra={blocked - want}"
+            )
 
 
 def test_simhash_block_layout_covers_all_bits():
@@ -247,68 +286,6 @@ def test_connected_components_nonconvergence_raises(spark):
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         dedup.connected_components(chain, "id_a", "id_b", max_iterations=2)
-
-
-def test_connected_components_star_matches_min_label(spark):
-    """The large-star/small-star strategy (O(log^2 n) rounds, diameter-
-    independent) must produce EXACTLY min-label's components on every
-    graph shape — including the long chain where min-label needs O(n)
-    rounds and a shuffled node order."""
-    import random
-
-    cases = [
-        # long chain: diameter 40 — the adversarial case the strategy is for
-        [(i, i + 1) for i in range(1, 41)],
-        # chain + cycle + pair (the shapes test's graph)
-        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (11, 12), (12, 10), (20, 21)],
-        # random graph, seeded
-        [(random.Random(7).randrange(50), random.Random(7 + i).randrange(50))
-         for i in range(60)],
-    ]
-    for pairs in cases:
-        pairs = [(a, b) for a, b in pairs if a != b]
-        edges = spark.createDataFrame(pairs, "id_a long, id_b long")
-        star = {
-            r.node: r.component
-            for r in dedup.connected_components_star(edges, "id_a", "id_b").collect()
-        }
-        label = {
-            r.node: r.component
-            for r in dedup.connected_components(edges, "id_a", "id_b").collect()
-        }
-        assert star == label
-    # on the 40-chain, min-label at 8 rounds fails while star converges
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 41)], "id_a long, id_b long"
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(chain, "id_a", "id_b", max_iterations=8)
-    got = dedup.connected_components_star(chain, "id_a", "id_b", max_iterations=8)
-    assert {r.component for r in got.collect()} == {1}
-
-
-def test_resolve_clusters_strategy_param(spark):
-    """resolve_duplicate_clusters(strategy='star') must pick identical
-    canonical winners."""
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
-    )
-    docs = spark.createDataFrame(
-        [(i, "x" * (10 + i)) for i in (1, 2, 3, 10, 11, 99)],
-        "doc_id long, text string",
-    )
-    a = sorted(
-        map(tuple, dedup.resolve_duplicate_clusters(pairs, docs, "doc_id", "text").collect())
-    )
-    b = sorted(
-        map(
-            tuple,
-            dedup.resolve_duplicate_clusters(
-                pairs, docs, "doc_id", "text", strategy="star"
-            ).collect(),
-        )
-    )
-    assert a == b and len(a) == 5
 
 
 def test_resolve_duplicate_clusters_canonical(spark):
@@ -775,19 +752,23 @@ def test_approx_describe_error_bounds(spark):
     assert abs(row.approx_quartiles[1] - exact_q) / max(abs(exact_q), 1) < 0.05
 
 
-def test_jaccard_verify_equals_allpairs_on_candidates(spark, doc_df):
+def test_jaccard_verify_equals_allpairs_on_candidates(spark, doc_df, join_plans):
     """Verification over a candidate set must equal the quadratic form
-    restricted to those pairs (same gram math, join-only plan)."""
+    restricted to those pairs (same gram math, join-only plan), with the
+    candidate pairs broadcast and shuffled alike."""
     allpairs = {
         (r.id_a, r.id_b): r.jaccard
         for r in dedup.ngram_jaccard_pairs(doc_df, "doc_id", "text", threshold=0.0).collect()
     }
     cand = spark.createDataFrame([(1, 2), (1, 3), (4, 5)], "id_a long, id_b long")
-    got = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in dedup.ngram_jaccard_verify(cand, doc_df, "doc_id", "text", threshold=0.0).collect()
-    }
-    assert got == {k: allpairs[k] for k in [(1, 2), (1, 3), (4, 5)]}
+    for plan in join_plans:
+        got = {
+            (r.id_a, r.id_b): r.jaccard
+            for r in _collect(
+                dedup.ngram_jaccard_verify(cand, doc_df, "doc_id", "text", threshold=0.0), plan
+            )
+        }
+        assert got == {k: allpairs[k] for k in [(1, 2), (1, 3), (4, 5)]}, plan
 
 
 def test_backfill_bloom_handles_null_keys(spark):

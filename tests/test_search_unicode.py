@@ -558,7 +558,7 @@ def test_near_search_dense_doc_stays_linear(spark):
 def test_bm25_indexed_equals_one_pass(spark, corpus_df):
     """bm25_search_indexed (pruned postings + doc_lengths sidecar) must
     return exactly the one-pass bm25_search's score_q ranking — the two
-    paths share _bm25_score_expr, so equality pins the sidecar plumbing
+    paths share _bm25_ranked, so equality pins the sidecar plumbing
     (df via count_distinct == pivot's tf>0 count, dl join, stats)."""
     from readability_scanner_spark.operators.search import (
         bm25_search,

@@ -65,7 +65,13 @@ def test_metrics_stream(spark, stream_input, tmp_path):
 
 def test_stateful_streaming_sessions(spark, tmp_path):
     """applyInPandasWithState: session state must carry across
-    micro-batches (two files → maxFilesPerTrigger=1 → two batches)."""
+    micro-batches (two files → maxFilesPerTrigger=1 → two batches).
+
+    The processing-time timeout keeps scheduling no-data batches, so the
+    availableNow query never terminates on its own: wait until all four
+    input rows are processed, then stop it."""
+    import time
+
     import pandas as pd
     from readability_scanner_spark.streaming.sessions import streaming_sessions
 
@@ -99,7 +105,13 @@ def test_stateful_streaming_sessions(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    try:
+        deadline = time.monotonic() + 180
+        while sum(p.numInputRows for p in q.recentProgress) < 4:
+            assert q.isActive and time.monotonic() < deadline, q.exception()
+            time.sleep(0.5)
+    finally:
+        q.stop()
     rows = spark.sql(
         "SELECT * FROM sessions_out ORDER BY last_ts"
     ).collect()
